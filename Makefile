@@ -5,8 +5,9 @@
 PY ?= python
 SF ?= /root/testdata/sf0.01
 SF_SMALL ?= /root/testdata/sf0.001
+SEED ?= 101
 
-.PHONY: test test-full oracle oracle-small audit gate bench
+.PHONY: test test-full oracle oracle-small audit gate perfbench bench-legacy
 
 # fast feedback loop (<5 min): everything not marked slow
 test:
@@ -34,7 +35,14 @@ audit:
 # the complete pre-merge gate
 gate: test-full oracle oracle-small audit
 
-# benchmark — run dead LAST on an idle machine (bench.py refuses to emit
-# JSON at 1-min load >= 1.5)
-bench:
+# the repository benchmark: the BENCHMARK.json command for each workload at
+# SEED, untraced; each run prints one JSON line (perfbench/README.md)
+perfbench:
+	python3 perfbench/run.py --workload ingest --seed $(SEED) --seconds 1 --trace 0
+	python3 perfbench/run.py --workload analytics --seed $(SEED) --seconds 1 --trace 0
+
+# legacy catalog-query timings behind BENCH_r*.json, not the benchmark —
+# run dead LAST on an idle machine (bench.py refuses to emit JSON at
+# 1-min load >= 1.5)
+bench-legacy:
 	$(PY) bench.py

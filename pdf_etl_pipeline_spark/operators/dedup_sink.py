@@ -13,6 +13,12 @@ semantics match the reference: re-running on an augmented corpus inserts
 only new keys. The streaming variant wraps the same function in
 ``foreachBatch`` (streaming/jobs.py).
 
+Each insert runs the dedup plan once: the deduped batch is persisted, its
+count builds the cache, and the append writes the cached rows, so the
+returned count is the number of rows written and neither the incoming plan
+nor the existing-key read runs a second time. The cache is released before
+the call returns, on success or error.
+
 Scale notes: the key set is read with only the key columns (column-pruned
 scan); Catalyst broadcasts it when small. When the existing-key side is too
 big to broadcast, the anti-join shuffles both sides on the key — at that
@@ -20,6 +26,8 @@ point bucket the table by the dedup key so the join co-locates.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +60,19 @@ def dedup_against_existing(
     return df.dropDuplicates(key_cols)
 
 
+def _append_once(fresh: DataFrame, append: Callable[[DataFrame], None]) -> int:
+    """Materialize ``fresh`` once, then ``append`` those same rows; returns
+    the rows written (0 = nothing to append, no write)."""
+    fresh = fresh.persist()
+    try:
+        n = fresh.count()
+        if n:
+            append(fresh)
+        return n
+    finally:
+        fresh.unpersist()
+
+
 def insert_dataframe(
     df: DataFrame,
     table_path: str,
@@ -60,11 +81,10 @@ def insert_dataframe(
 ) -> int:
     """Anti-join dedup + append to a parquet table; returns inserted count
     (0 = all duplicates — reference db_connection.py:63 semantics)."""
-    fresh = dedup_against_existing(df, table_path, keys, spark)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(table_path)
-    return n
+    return _append_once(
+        dedup_against_existing(df, table_path, keys, spark),
+        lambda fresh: fresh.write.mode("append").parquet(table_path),
+    )
 
 
 def invoice_exists(
@@ -106,11 +126,10 @@ def write_jdbc_dedup(
     existing = spark.read.jdbc(
         url, f"(SELECT DISTINCT {', '.join(key_cols)} FROM {table}) t", properties=properties or {}
     )
-    fresh = df.join(existing, key_cols, "left_anti").dropDuplicates(key_cols)
-    n = fresh.count()
-    if n:
-        fresh.write.jdbc(url, table, mode="append", properties=properties or {})
-    return n
+    return _append_once(
+        df.join(existing, key_cols, "left_anti").dropDuplicates(key_cols),
+        lambda fresh: fresh.write.jdbc(url, table, mode="append", properties=properties or {}),
+    )
 
 
 def invoice_exists_jdbc(

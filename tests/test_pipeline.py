@@ -1,8 +1,11 @@
 """End-to-end extraction plan + dedup sink + corpus sources (stub PDFs)."""
 
+import uuid
+
 from pdf_etl_pipeline_spark.operators.dedup_sink import insert_dataframe, invoice_exists
 from pdf_etl_pipeline_spark.parsers import fixtures as FX
 from pdf_etl_pipeline_spark.plans.pipeline import run_extraction_pipeline, run_on_lines
+from pdf_etl_pipeline_spark.sources.files import scan_corpus
 from pdf_etl_pipeline_spark.sources.pdf import extract_text_lines, extract_word_boxes
 import pytest
 
@@ -26,6 +29,70 @@ def test_scan_extract_parse_end_to_end(spark, tmp_path):
     # letting-date partition column came from the directory name
     corpus_paths = {r.file for r in rows}
     assert any("2023-05-03" in p for p in corpus_paths)
+
+
+def _plan_node_rows(spark, group: str, node_name: str) -> int:
+    """Sum of 'number of output rows' over the plan nodes named ``node_name``
+    in the SQL executions that ran jobs of job group ``group``."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    sql = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for e in conv.asJava(sql.executionsList()):
+        if not jobs & set(conv.asJava(e.jobs()).keySet()):
+            continue
+        values = conv.asJava(sql.executionMetrics(e.executionId()))
+        for node in conv.asJava(sql.planGraph(e.executionId()).allNodes()):
+            if node.name() != node_name:
+                continue
+            for m in conv.asJava(node.metrics()):
+                if m.name() == "number of output rows":
+                    v = values.get(m.accumulatorId())
+                    total += int(str(v).replace(",", "")) if v else 0
+    return total
+
+
+def test_sink_batch_extracts_each_file_once(spark, tmp_path):
+    """A sink batch runs the mapInPandas extraction once per file: the seven
+    parser branches read one materialized extraction, and the insert does
+    not re-run the plan for its write. The returned count is what the sink
+    gained."""
+    root = _write_stub_corpus(tmp_path / "in")
+    sink = str(tmp_path / "invoices")
+    run_on_lines(FX.corpus_df(spark, FX.INVOICE_DOCS[:1]), sink_path=sink)
+    before = spark.read.parquet(sink).count()
+    n_files = scan_corpus(spark, root).count()
+
+    sc = spark.sparkContext
+    group = f"extract-once-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "extract-once")
+    try:
+        n = run_extraction_pipeline(spark, root, sink_path=sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert _plan_node_rows(spark, group, "MapInPandas") == n_files
+    assert n > 0
+    assert spark.read.parquet(sink).count() - before == n
+
+
+def test_sink_batch_releases_cache(spark, tmp_path):
+    """The extraction cache is released when the insert fails (the error
+    still reaches the caller) and after a normal sink batch."""
+    from py4j.protocol import Py4JJavaError
+
+    root = _write_stub_corpus(tmp_path / "in")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    not_a_table = tmp_path / "not_a_table"
+    not_a_table.write_text("not parquet")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        run_extraction_pipeline(spark, root, sink_path=str(not_a_table))
+    assert cache.isEmpty()
+    assert run_extraction_pipeline(spark, root, sink_path=str(tmp_path / "invoices")) > 0
+    assert cache.isEmpty()
 
 
 def test_extract_word_boxes_stub(spark, tmp_path):
