@@ -6,8 +6,10 @@ PY ?= python
 SF ?= /root/testdata/sf0.01
 SF_SMALL ?= /root/testdata/sf0.001
 SEED ?= 101
+WORKLOAD ?= analytics
+SEEDS ?= 101-110
 
-.PHONY: test test-full oracle oracle-small audit gate perfbench bench-legacy
+.PHONY: test test-full oracle oracle-small audit gate perfbench perfbench-ab bench-legacy
 
 # fast feedback loop (<5 min): everything not marked slow
 test:
@@ -40,6 +42,14 @@ gate: test-full oracle oracle-small audit
 perfbench:
 	python3 perfbench/run.py --workload ingest --seed $(SEED) --seconds 1 --trace 0
 	python3 perfbench/run.py --workload analytics --seed $(SEED) --seconds 1 --trace 0
+
+# alternated parent/change pairs of the benchmark at SEEDS: medians,
+# quartiles, each metric against its bound and, with CLAIM=<metric>, the
+# claim rule (tools/perfbench_ab.py); PARENT is a checkout of the commit
+# to compare against
+perfbench-ab:
+	$(if $(PARENT),,$(error set PARENT=<checkout of the parent commit>))
+	python3 tools/perfbench_ab.py --parent $(PARENT) --workload $(WORKLOAD) --seeds $(SEEDS) $(if $(CLAIM),--claim $(CLAIM))
 
 # legacy catalog-query timings behind BENCH_r*.json, not the benchmark —
 # run dead LAST on an idle machine (bench.py refuses to emit JSON at

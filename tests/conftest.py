@@ -14,6 +14,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # sf0.001 tests). Pinning it here keeps the whole suite at 4 even after
 # a test drives a registered query.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+# get_spark's default driver heap (48g) lets the one test JVM grow past the
+# memory of a small host over a full run (one run on a 16 GB, 4-vCPU host
+# was killed by the kernel at 15.8 GB resident; another peaked at 7.9 GB).
+# The sf0.001 tests need far less; a bounded heap makes the JVM collect
+# instead of growing.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -253,7 +253,70 @@ def test_o5_head_preview(spark, sf_dir):
 
     head = load_table(spark, sf_dir, "lineitem").limit(10)
     assert len(head.collect()) == 10
-    assert "GlobalLimit" in head._jdf.queryExecution().executedPlan().toString() or True
+    assert "CollectLimit" in head._jdf.queryExecution().executedPlan().toString()
+
+
+def test_load_table_reuses_schema_per_file_set(spark, sf_dir, tmp_path):
+    """load_table infers a path's parquet schema once per file set and
+    schema-inference confs: a repeat read runs no Spark job, and a changed
+    file, a flipped conf or a hive-partitioned directory reads what
+    spark.read.parquet reads."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_etl_pipeline_spark.session import load_table
+
+    sc = spark.sparkContext
+
+    def load_jobs(name):
+        group = f"schema-reuse-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "schema-reuse")
+        try:
+            df = load_table(spark, str(tmp_path), name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    def assert_reads_as_spark(df, path):
+        ref = spark.read.parquet(path)
+        assert df.schema == ref.schema
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, ref.collect()))
+
+    path = str(tmp_path / "lineitem.parquet")
+    shutil.copyfile(f"{sf_dir}/lineitem.parquet", path)
+    load_table(spark, str(tmp_path), "lineitem")
+    df, jobs = load_jobs("lineitem")
+    assert jobs == []
+    assert_reads_as_spark(df, path)
+
+    wider = pq.read_table(path)
+    wider = wider.append_column("extra", pa.array([7] * wider.num_rows, pa.int64()))
+    pq.write_table(wider, path)
+    df = load_table(spark, str(tmp_path), "lineitem")
+    assert df.columns[-1] == "extra"
+    assert_reads_as_spark(df, path)
+
+    blobs = str(tmp_path / "blobs.parquet")
+    pq.write_table(pa.table({"id": [1, 2], "b": pa.array([b"x", b"y"], pa.binary())}), blobs)
+    assert dict(load_table(spark, str(tmp_path), "blobs").dtypes)["b"] == "binary"
+    try:
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        assert dict(load_table(spark, str(tmp_path), "blobs").dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(load_table(spark, str(tmp_path), "blobs").dtypes)["b"] == "binary"
+
+    parts = str(tmp_path / "parts.parquet")
+    spark.createDataFrame([(i, i % 3) for i in range(12)], "id long, k int").write.partitionBy(
+        "k"
+    ).parquet(parts)
+    load_table(spark, str(tmp_path), "parts")
+    df, jobs = load_jobs("parts")
+    assert jobs == []
+    assert "k" in df.columns
+    assert_reads_as_spark(df, parts)
 
 
 def test_t13_bbox_svg(spark):
